@@ -23,7 +23,6 @@ from __future__ import annotations
 import argparse
 import glob
 import json
-import math
 import os
 import shutil
 import signal
@@ -41,7 +40,6 @@ from workloads import WORKLOADS  # noqa: E402
 BENCHMARK_JSON = os.path.join(ROOT, "BENCHMARK.json")
 OUT_DIR = os.path.join(ROOT, ".perfbench")
 RUN_TIMEOUT_S = 165
-DRIVER_MEMORY = "2g"
 
 
 def quartiles(values: list[float]) -> tuple[float, float, float]:
@@ -52,10 +50,12 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def percentile(values: list[float], p: float) -> float:
-    """Nearest-rank percentile."""
-    ordered = sorted(values)
-    return ordered[max(0, math.ceil(p / 100.0 * len(ordered)) - 1)]
+def p90(values: list[float]) -> float:
+    """90th percentile, interpolated between the two nearest ranks: with
+    few samples a nearest-rank percentile is just the maximum."""
+    if len(values) < 2:
+        return values[0]
+    return statistics.quantiles(values, n=10, method="inclusive")[8]
 
 
 def end_to_end(result: dict) -> tuple[dict[str, float], dict]:
@@ -66,7 +66,7 @@ def end_to_end(result: dict) -> tuple[dict[str, float], dict]:
         "setup_s": result["setup_s"],
         "pass_s": statistics.median(p["pass_s"] for p in passes),
         "query_p50_s": statistics.median(latencies) if latencies else float("nan"),
-        "query_p90_s": percentile(latencies, 90) if latencies else float("nan"),
+        "query_p90_s": p90(latencies) if latencies else float("nan"),
         "jobs_per_pass": statistics.median(sum(q.get("jobs", 0) for q in p["queries"])
                                            for p in passes),
     }
@@ -133,7 +133,6 @@ def worker_env(tmp_dir: str) -> dict:
     env = dict(os.environ)
     env["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, env.get("PYTHONPATH")) if p)
     env["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    env["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEMORY
     env["SPARK_LOCAL_DIRS"] = os.path.join(tmp_dir, "spark")
     env["TMPDIR"] = tmp_dir
     env["PYSPARK_PYTHON"] = sys.executable
@@ -267,7 +266,9 @@ def main(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", choices=sorted(WORKLOADS))
     ap.add_argument("--seed", type=int, default=0)
-    ap.add_argument("--seconds", type=float, default=8)
+    ap.add_argument("--seconds", type=float, default=8,
+                    help="recorded with the run; the number of timed passes is fixed "
+                         "(workloads.TIMED_PASSES) so that it cannot follow the host's speed")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--results", help="directory for the run's result file")
     ap.add_argument("--diff", nargs=2, metavar=("A", "B"),

@@ -64,3 +64,6 @@ def test_smoke_every_workload_matches_oracle_traced_and_untraced(spark):
     assert figures["relational"]["sources.read_calls"] > 0
     assert figures["etl"]["streaming.batches"] > 0
     assert figures["etl"]["python.total_ms"] > 0
+    assert figures["etl"]["operators.textstats.calls"] > 0
+    assert figures["iterative"]["operators.graph.calls"] > 0
+    assert figures["iterative"]["operators.linkage.calls"] > 0

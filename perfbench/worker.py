@@ -3,7 +3,7 @@ every result, and write the run's figures as JSON.
 
 Started by ``run.py``; not meant to be run by hand. A pass runs every
 query of the workload once, in an order shuffled by the seed; a run
-makes round(seconds / nominal pass time) timed passes after set-up. A
+makes a fixed number of timed passes after set-up. A
 query is timed the way ``bench.py`` times it: the registry call
 (build), then ``collect()`` (action). Signatures, job counts and trace bookkeeping are
 taken between queries, outside the timed intervals.
@@ -27,7 +27,7 @@ sys.path.insert(0, HERE)
 
 from check import rows_signature  # noqa: E402
 from spark_stats import StatusReader, catalyst_ms, jobs_submitted  # noqa: E402
-from workloads import DATA_DIR, NOMINAL_PASS_S, WORKLOADS, oracle_path  # noqa: E402
+from workloads import DATA_DIR, TIMED_PASSES, WORKLOADS, oracle_path  # noqa: E402
 
 CALIBRATION_REPEATS = 3
 
@@ -209,7 +209,7 @@ def measure(spark, args, session_ready: float) -> dict:
         collector = LayerCollector(runner.status, spark, tracer)
         runner.status.drain()
         runner.status.new_executions()
-    n_passes = max(1, round(args.seconds / NOMINAL_PASS_S[args.workload]))
+    n_passes = TIMED_PASSES
     if tracer is not None:
         n_passes = max(4, n_passes)  # two untraced and two traced at least
     try:

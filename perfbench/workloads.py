@@ -4,8 +4,9 @@ registry, run over the tables committed under ``perfbench/data``.
 Each slice stresses different engine layers, so that a change to one
 layer has a workload that exercises it and one that bypasses it. The
 slices are small (a warm pass takes about four seconds at sf0.01 on
-local[4]) because a run pays JVM start, two warm-up passes and its timed
-passes, and a comparison needs many runs of every workload.
+local[4], six on iterative) because a run pays JVM start, its warm-up
+passes and its timed passes, and a comparison needs many runs of every
+workload.
 """
 
 from __future__ import annotations
@@ -27,17 +28,19 @@ SMOKE_DATA_DIR = os.path.join(HERE, "data", "sf0.001")
 #   streaming.*, sources.write_s -> pass_s on etl; absent on relational.
 # - catalyst.* -> query_p50_s on relational and etl.
 # - executor.cpu_s, shuffle.* -> query_p90_s on relational, pass_s on
-#   iterative.
+#   iterative (k-hop BFS: a join and an aggregate per hop).
+# - operators.graph.*, operators.dedup/linkage.* -> pass_s on iterative;
+#   operators.textstats.* -> pass_s on etl.
 # - calibration.*, session.* -> setup_s; they also flag a slow host.
 WORKLOADS: dict[str, list[str]] = {
     # The paper's pipeline: clean -> translate -> map -> write. Stresses
     # operators.clean/distinct/enrich/mapping, semantic, plans.pipeline
     # (pool-thread sampling jobs), sources writes (orc round trip,
     # versioned upsert), streaming micro-batches and the Python/Arrow
-    # boundary; almost no shuffle.
+    # boundary, plus a textstats language-mix report; almost no shuffle.
     "etl": [
         "q_pipeline_translation", "q_translate_distributed", "q_map_split_tables",
-        "q_source_orc", "q_merge_upsert", "q_events_stream_enrich",
+        "q_source_orc", "q_merge_upsert", "q_events_stream_enrich", "q_text_language_mix",
     ],
     # Read-only TPC-H-shaped scans, joins, aggregates, windows and set
     # operations: sources reads (one schema-inference job per parquet
@@ -48,18 +51,21 @@ WORKLOADS: dict[str, list[str]] = {
         "q_agg_stats", "q_agg_rollup", "q_window_topk_per_customer", "q_set_union",
         "q_pivot_status",
     ],
-    # An iterative entity-resolution loop (blocking, pairwise similarity,
-    # clustering), where most wall time is DataFrame construction: lineage
-    # truncation, eager probes and driver round trips, with nearly all of
-    # its jobs submitted before the final action.
-    "iterative": ["q_entity_resolution"],
+    # Iterative loops whose wall time is mostly DataFrame construction:
+    # an entity-resolution loop (blocking, pairwise similarity,
+    # clustering) and a multi-source k-hop BFS over the trade graph. Both
+    # truncate lineage and submit nearly all of their jobs before the
+    # final action; the BFS adds a shuffle join per hop. It stands in for
+    # the PageRank queries, which cost twice as much per pass.
+    "iterative": ["q_entity_resolution", "q_graph_khop"],
 }
 
-# Warm pass seconds on the reference box (4-vCPU Xeon VM, local[4]). A run
-# makes round(seconds / nominal) timed passes, at least one: a pass count
-# that followed the host's speed during the run would change which
-# warm-up state the median sees, and with it the metric.
-NOMINAL_PASS_S = {"etl": 3.5, "relational": 3.5, "iterative": 4.2}
+# Timed passes per run. The count is fixed rather than derived from
+# --seconds or the host's speed: a count that varied would change which
+# warm-up state the median sees, and with it the metric. A warm pass
+# takes about 4 s on etl and relational and 6 s on iterative (4-vCPU
+# Xeon VM, local[4]).
+TIMED_PASSES = 2
 
 
 def oracle_path(data_dir: str) -> str:
