@@ -13260,10 +13260,15 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     #     frontier BFS, median checkpoint, pretrain-chain checkpoint)
     #     move into the driver's first-50 window; the four unchanged
     #     driver-green entries they displace rotate to their old slots ---
-    "q_dedup_prefix_filter": (q_dedup_prefix_filter, _DEDUP_PREFIX_FILTER_SQL),
+    # --- graph-tier round-loop refactor window rotation: the three
+    #     affected graph queries that sat past the window (triangle
+    #     census, HITS, degree histogram) swap slots with three unchanged
+    #     r16-green entries (q_dedup_prefix_filter, q_pipeline_pretrain,
+    #     q_clean_mad_outliers). See WINDOW_ROTATION.md. ---
+    "q_graph_triangles": (q_graph_triangles, _graph_triangles_sql()),
     "q_graph_khop": (q_graph_khop, _graph_khop_sql()),
-    "q_pipeline_pretrain": (q_pipeline_pretrain, _pipeline_pretrain_sql()),
-    "q_clean_mad_outliers": (q_clean_mad_outliers, _CLEAN_MAD_OUTLIERS_SQL),
+    "q_graph_hits": (q_graph_hits, _graph_hits_sql()),
+    "q_graph_degree_dist": (q_graph_degree_dist, _GRAPH_DEGREE_DIST_SQL),
     "q_semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
     "q_knn_ivf": (q_knn_ivf, _knn_ivf_sql()),
     "q_events_stream_tumbling": (q_events_stream_tumbling, _EVENTS_TUMBLING_SQL),
@@ -13312,7 +13317,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_agg_mode": (q_agg_mode, _AGG_MODE_SQL),
     "q_events_adoption": (q_events_adoption, _EVENTS_ADOPTION_SQL),
     "q_agg_weighted_median": (q_agg_weighted_median, _AGG_WEIGHTED_MEDIAN_SQL),
-    "q_graph_degree_dist": (q_graph_degree_dist, _GRAPH_DEGREE_DIST_SQL),
+    "q_clean_mad_outliers": (q_clean_mad_outliers, _CLEAN_MAD_OUTLIERS_SQL),
     "q_source_csv_roundtrip": (q_source_csv_roundtrip, _SOURCE_CSV_ROUNDTRIP_SQL),
     "q_text_zipf": (q_text_zipf, _TEXT_ZIPF_SQL),
     "q_events_asof_forward": (q_events_asof_forward, _EVENTS_ASOF_FORWARD_SQL),
@@ -13329,7 +13334,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_text_bpe_tokenize": (q_text_bpe_tokenize, _text_bpe_tokenize_sql()),
     "q_layout_compaction": (q_layout_compaction, _LAYOUT_COMPACTION_SQL),
     "q_sample_temperature": (q_sample_temperature, _SAMPLE_TEMPERATURE_SQL),
-    "q_graph_hits": (q_graph_hits, _graph_hits_sql()),
+    "q_pipeline_pretrain": (q_pipeline_pretrain, _pipeline_pretrain_sql()),
     "q_events_funnel": (q_events_funnel, _EVENTS_FUNNEL_SQL),
     "q_events_retention": (q_events_retention, _EVENTS_RETENTION_SQL),
     "q_validate_kanonymity": (q_validate_kanonymity, _VALIDATE_KANON_SQL),
@@ -13438,7 +13443,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_text_oov_rate": (q_text_oov_rate, _TEXT_OOV_RATE_SQL),
     "q_sample_weighted": (q_sample_weighted, _SAMPLE_WEIGHTED_SQL),
     "q_split_group_holdout": (q_split_group_holdout, _SPLIT_GROUP_SQL),
-    "q_graph_triangles": (q_graph_triangles, _graph_triangles_sql()),
+    "q_dedup_prefix_filter": (q_dedup_prefix_filter, _DEDUP_PREFIX_FILTER_SQL),
     "q_knn_pq": (q_knn_pq, _knn_pq_sql()),
     "q_translate_distributed": (q_translate_distributed, _translate_distributed_sql()),
     "q_dedup_ngram_jaccard": (q_dedup_ngram_jaccard, _NGRAM_JACCARD_SQL),

@@ -250,22 +250,6 @@ def preprocess_data(
     return df, log
 
 
-def preprocess_sheets(
-    sheets: dict[str, DataFrame], collect_counts: bool = False
-) -> tuple[dict[str, DataFrame], dict[str, list[str]]]:
-    """Multi-sheet cleaning — the function the reference references but
-    never wrote (``preprocess.py:119`` calls an undefined
-    ``preprocess_multiple_sheets``; SURVEY.md §3). Mapping the chain over
-    the dict makes it exist."""
-    out: dict[str, DataFrame] = {}
-    logs: dict[str, list[str]] = {}
-    for name, df in sheets.items():
-        cleaned, log = preprocess_data(df, collect_counts=collect_counts)
-        out[name] = cleaned
-        logs[name] = log
-    return out, logs
-
-
 def winsorize(
     df: DataFrame,
     cols: list[str],

@@ -453,6 +453,22 @@ def embedding_near_duplicates(
     )
 
 
+def _halve_pointers(labels: DataFrame) -> DataFrame:
+    """One pointer-halving step ``lab <- lab(lab)`` over an ``(id, lab)``
+    label forest: a self-join that compresses every label chain by one
+    level (labels without a row of their own keep their value), lazily
+    cut so the next round's plan starts at a LogicalRDD."""
+    lablab = labels.select(F.col("id").alias("__lid"), F.col("lab").alias("__llab"))
+    return (
+        labels.join(lablab, labels["lab"] == lablab["__lid"], "left")
+        .select(
+            F.col("id"),
+            F.coalesce(F.col("__llab"), F.col("lab")).alias("lab"),
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
 def near_duplicate_clusters(
     pairs: DataFrame,
     all_ids: DataFrame,
@@ -489,11 +505,13 @@ def near_duplicate_clusters(
     same. Edges and every label round are lazily
     ``localCheckpoint``-ed: persist alone does NOT truncate the logical
     plan, so Catalyst would re-optimize a lineage that grows by one
-    join+agg per round — checkpointing keeps every round's plan O(1),
-    and LAZY checkpoints let the per-round ``edges.count()`` (the
-    termination probe: contracted edge set empty ⟺ labels stationary)
-    be the single job that materializes the whole round. A final
-    pointer-doubling pass resolves the label forest to the exact
+    join+agg per round — checkpointing keeps every round's plan O(1).
+    "Lazy" does not mean job-free: with AQE on (the session default)
+    each ``localCheckpoint(eager=False)`` plans adaptively and runs the
+    shuffle stages below it while the round is being built, so a round
+    costs its checkpoint jobs plus the per-round ``edges.count()`` (the
+    termination probe: contracted edge set empty ⟺ labels stationary).
+    A final pointer-doubling pass resolves the label forest to the exact
     component minimum, with stationarity detected by a
     TYPE-INDEPENDENT check: the exact decimal sum of md5 hashes over
     (id, label) pairs. (Summing raw ids cast to decimal was
@@ -515,11 +533,12 @@ def near_duplicate_clusters(
     pairs.count()
     # LAZY localCheckpoints throughout the loop: localCheckpoint(False)
     # truncates the LOGICAL plan immediately (the returned frame is a
-    # LogicalRDD leaf) but defers materialization to the next action, so
-    # two propagation rounds + the convergence aggregate all ride ONE
-    # job. The eager variant cost 2 jobs per round (checkpoint + sum);
-    # on small graphs the fixed per-job driver overhead dominated the
-    # candidate-sized shuffles 4:1.
+    # LogicalRDD leaf). It is not job-free: with AQE on, turning the
+    # frame into its RDD plans it adaptively, which runs the shuffle
+    # stages below the cut while the round is being built. The eager
+    # variant materialized every checkpoint in a job of its own on top
+    # (2 jobs per round: checkpoint + sum); on small graphs the fixed
+    # per-job driver overhead dominated the candidate-sized shuffles 4:1.
     edges = (
         pairs.unionByName(pairs.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
@@ -568,7 +587,7 @@ def near_duplicate_clusters(
     # edge set EMPTY: every connected pair shares a label, which makes
     # labels stationary — no separate convergence aggregate, the
     # edges.count() that drives the loop is the only action per round
-    # (one job: all checkpoints are lazy).
+    # (the lazy cuts add build-time jobs under AQE, see above).
     rounds = 0
     while True:
         rounds += 1
@@ -584,17 +603,7 @@ def near_duplicate_clusters(
             .groupBy("id")
             .agg(F.min("lab").alias("lab"))
         )
-        lablab = propagated.select(
-            F.col("id").alias("__lid"), F.col("lab").alias("__llab")
-        )
-        labels = (
-            propagated.join(lablab, propagated["lab"] == lablab["__lid"], "left")
-            .select(
-                F.col("id"),
-                F.coalesce(F.col("__llab"), F.col("lab")).alias("lab"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        labels = _halve_pointers(propagated)
         la = labels.select(F.col("id").alias("__ea"), F.col("lab").alias("__la"))
         lb = labels.select(F.col("id").alias("__eb"), F.col("lab").alias("__lb"))
         edges = (
@@ -618,17 +627,7 @@ def near_duplicate_clusters(
     # negligible 60-bit coincidence).
     prev_sum = labels.agg(state_sum).first()[0]
     for _ in range(max_iter):
-        lablab = labels.select(
-            F.col("id").alias("__lid"), F.col("lab").alias("__llab")
-        )
-        labels = (
-            labels.join(lablab, labels["lab"] == lablab["__lid"], "left")
-            .select(
-                F.col("id"),
-                F.coalesce(F.col("__llab"), F.col("lab")).alias("lab"),
-            )
-            .localCheckpoint(eager=False)
-        )
+        labels = _halve_pointers(labels)
         new_sum = labels.agg(state_sum).first()[0]
         if new_sum == prev_sum:
             break

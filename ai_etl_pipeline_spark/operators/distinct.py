@@ -65,17 +65,6 @@ def distinct_column_values(df: DataFrame, column: str) -> DataFrame:
     )
 
 
-def extract_unique_text_values(df: DataFrame, columns: list[str] | None = None) -> dict[str, list[str]]:
-    """A2 end-to-end (``translate.py:11-34``): ``{column: [unique values]}``.
-
-    Driver-collected BY DESIGN: these dicts feed external translation/LLM
-    APIs, so they must reach the driver; the distinct() has already
-    crushed data-scale → distinct-scale (33k values at reference scale).
-    """
-    cols = columns if columns is not None else string_columns(df)
-    return {c: [r["value"] for r in distinct_column_values(df, c).collect()] for c in cols}
-
-
 def head_sample(df: DataFrame, n: int = 2) -> dict[str, list]:
     """P11 (``mapper.py:139-166``): first-n rows as ``{col: [values]}``."""
     rows = df.limit(n).collect()

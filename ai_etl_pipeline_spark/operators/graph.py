@@ -9,9 +9,13 @@ counting over an edge relation.
 Scale shape: every iteration is one contribution projection + one
 destination-keyed aggregate + one join back to the node set — all
 edge-/node-sized shuffles, nothing corpus-quadratic, and the iteration
-count is FIXED (power iteration), so the whole computation stays one
-lazy plan: no driver actions, no convergence probes, resumable and
-replayable like any other DataFrame.
+count is FIXED (power iteration), so no operator here runs a
+convergence probe or a ``count()``/``first()``. It is NOT free of
+build-time jobs: with AQE on (the session default) every
+``localCheckpoint(eager=False)`` plans its frame adaptively, which runs
+the shuffle stages below it while the operator is still building the
+result — each lineage cut is one or more synchronous Spark jobs before
+the caller's action.
 
 Arithmetic is INTEGER micro-units (rank scaled by ``base``) with
 integer division everywhere: floating-point PageRank is
@@ -27,8 +31,81 @@ entities by importance.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Lineage-cut cadence of the fixed-round loops: rounds between lazy
+# localCheckpoints of the carried frame (see _fixed_rounds).
+# Symmetric pagerank, 3: PySpark analyzes eagerly per transformation, so
+# plan-build cost is quadratic between cuts; swept on the 8-iteration
+# trade graph, cadence 1/2/3/4 = 10.0/7.3/6.5-7.3/7.6 s (r17; r12 had 3
+# ~25% faster than 6) — every cut also pays a full physical planning.
+_PAGERANK_CUT_EVERY = 3
+# Directed pagerank, 1: the rank frame is read TWICE per round (the
+# contribution projection and the dangling scalar), so an uncut chain is
+# genuinely recomputed — the r17 directed-personalized plan carried 168
+# BroadcastExchanges and zero ReusedExchange; per-round cuts 8.0→4.3 s.
+_PAGERANK_DIRECTED_CUT_EVERY = 1
+# Label propagation, 2: swept against 1 in r17 — components 2.71 s vs
+# 3.05-3.26 s, communities flat (exchange reuse covers the label frame's
+# doubled reference inside a round).
+_LABEL_PROP_CUT_EVERY = 2
+# HITS, 4: each half-step already cuts its raw aggregate (the
+# doubling-plan fix, 41.5→11.8 s at sf0.001), so the hub frame
+# grows by two node-sized joins per round; 4 is the cadence it shipped
+# with, no sweep recorded.
+_HITS_CUT_EVERY = 4
+
+
+def _fixed_rounds(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    rounds: int,
+    cut_every: int,
+    snapshot: bool = False,
+) -> tuple[DataFrame, DataFrame | None]:
+    """Apply ``step`` ``rounds`` times to ``state``, lazily
+    ``localCheckpoint``-ing the carried frame at the start of every
+    ``cut_every``-th round — never after the last round, whose output
+    is the caller's to plan. ``snapshot=True`` also cuts the frame that
+    enters the LAST round and returns it as the penultimate state (the
+    receipt columns diff it against the final one); one cut serves both
+    when the cadence already lands there. Returns ``(final, penultimate
+    or None)``."""
+    prev = None
+    for r in range(rounds):
+        last = r == rounds - 1
+        if (r and r % cut_every == 0) or (snapshot and last):
+            state = state.localCheckpoint(eager=False)
+        if snapshot and last:
+            prev = state
+        state = step(state)
+    return state, prev
+
+
+def _undirected_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Normalized undirected edge set ``(a, b)`` with ``a < b``: each
+    unordered pair once, self-loops dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _undirected_degrees(e: DataFrame) -> DataFrame:
+    """``(n, d)`` node degrees of a normalized ``(a, b)`` edge set."""
+    return (
+        e.select(F.col("a").alias("n"))
+        .unionByName(e.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
 
 
 def pagerank(
@@ -39,7 +116,6 @@ def pagerank(
     damping_pct: int = 85,
     base: int = 1_000_000,
     symmetric: bool = True,
-    checkpoint_every: int | None = 3,
     seeds: DataFrame | None = None,
     delta_receipt: bool = False,
     weight_col: str | None = None,
@@ -78,31 +154,18 @@ def pagerank(
     Returns ``(node, rank, degree)`` — rank in micro-units, degree =
     out-degree (0 for pure sinks in directed mode).
 
-    ``checkpoint_every`` lazily ``localCheckpoint``s the rank frame
-    every N iterations: the plan stays O(N) deep for Catalyst while
-    still requiring zero driver actions (materialization happens on
-    the caller's first action, like every other operator here). Set
-    None to keep one pure plan (fine to ~10 iterations). Default 3
-    (r12): PySpark analyzes eagerly per transformation, so driver-side
-    plan-build cost is quadratic between truncations — cadence 3
-    measured ~25% faster end-to-end than 6 at 8 iterations, and
-    cadence 1 is slower again (every truncation pays a full physical
-    planning for the df→RDD conversion; re-confirmed r17: cadence 1 ≈
-    10 s vs cadence 3 ≈ 6.5-7 s on the 8-iteration trade graph).
-    In DIRECTED mode (``symmetric=False``) the rank frame is referenced
-    TWICE per iteration — the contribution projection and the dangling
-    scalar — so there the lineage is truncated EVERY iteration
-    regardless of ``checkpoint_every``: without it the duplicated
-    subtree is genuinely recomputed (the r17 before-plan of the
-    directed personalized query carried 168 BroadcastExchanges with
-    zero ReusedExchange; per-iteration truncation measured 8.0→4.3 s).
+    The rank frame is lazily ``localCheckpoint``-ed every
+    ``_PAGERANK_CUT_EVERY`` (3) iterations when symmetric and EVERY
+    iteration when directed, where it is read twice per round (the
+    reasons sit with the constants). Each cut runs its stages as a
+    build-time job under AQE (module docstring).
 
     ``delta_receipt`` (r9, the k-core certificate's sibling) appends a
     ``max_delta`` column: the max absolute rank change between the
     final two iterations, in micro-units — the fixpoint-proximity
     receipt that says whether the FIXED iteration count was enough
-    (one extra node-sized join + scalar aggregate, still zero driver
-    actions; same scalar on every row).
+    (one extra node-sized join + scalar aggregate and one cut of the
+    penultimate rank frame; same scalar on every row).
 
     ``weight_col`` (r9): WEIGHTED random walk — each out-edge receives
     rank proportional to its (positive integer) weight: ``contrib(v→u)
@@ -139,9 +202,8 @@ def pagerank(
     # iteration references edges/deg/nodes, and without truncation each
     # reference re-executes the whole upstream edge derivation (a
     # fact-fact join in the trade-graph query) — 8 iterations paid the
-    # base join ~16×. Lazy, so the operator still performs no driver
-    # action; blocks are reclaimed by the ContextCleaner when the
-    # result is dropped.
+    # base join ~16×. Blocks are reclaimed by the ContextCleaner when
+    # the result is dropped.
     # hash-partition the edge relation on the join key BEFORE the
     # checkpoint: LogicalRDD preserves outputPartitioning, so the
     # per-iteration contribution join reuses the layout instead of
@@ -213,8 +275,7 @@ def pagerank(
         "left",
     )
     if not symmetric:
-        # scalar node count for the per-iteration dangling share —
-        # one row, computed once, broadcast into every iteration
+        # scalar node count for the per-iteration dangling share
         n_nodes = (
             nodes.agg(F.count("*").cast("bigint").alias("__n"))
             .cache()
@@ -252,8 +313,8 @@ def pagerank(
             seed_nodes.withColumn("__is_seed", F.lit(1)), "__node", "left"
         ).crossJoin(F.broadcast(seed_tele))
         if not symmetric:
-            # directed PPR: the per-iteration sink mass is divided by
-            # the SEED count (teleport-consistent dangling), one scalar
+            # directed PPR: the sink mass is divided by the SEED count
+            # (teleport-consistent dangling)
             n_seeds = (
                 seed_nodes.agg(F.count("*").cast("bigint").alias("__s"))
                 .cache()
@@ -286,17 +347,46 @@ def pagerank(
     else:
         ranks = nd.withColumn("__rank", F.lit(base).cast("bigint"))
     teleport = (100 - damping_pct) * base
-    prev_ranks = None
+    if symmetric and seeds is not None:
+        rank_sql = (
+            "(coalesce(__is_seed, 0) * __tele + "
+            f"{damping_pct} * "
+            "coalesce(__incoming, cast(0 as bigint))) div 100"
+        )
+    elif symmetric:
+        rank_sql = (
+            f"(cast({teleport} as bigint) + {damping_pct} * "
+            "coalesce(__incoming, cast(0 as bigint))) div 100"
+        )
+    elif seeds is not None:
+        # directed PERSONALIZED: teleport AND dangling mass both land on
+        # the seed set — a surfer at a dead end restarts at a seed
+        # (damped like any hop)
+        rank_sql = (
+            "(coalesce(__is_seed, 0) * "
+            f"(__tele + {damping_pct} * __sink_share) + "
+            f"{damping_pct} * "
+            "coalesce(__incoming, cast(0 as bigint))) div 100"
+        )
+    else:
+        # dangling mass: ranks sitting on nodes with no out-edge,
+        # redistributed uniformly
+        rank_sql = (
+            f"(cast({teleport} as bigint) + {damping_pct} * "
+            "(coalesce(__incoming, cast(0 as bigint)) + __sink_share)) "
+            "div 100"
+        )
+    # directed modes divide the sink mass by the seed count (PPR) or
+    # the node count — a one-row scalar computed once
+    sink_den = None
+    if not symmetric:
+        sink_den = n_seeds if seeds is not None else n_nodes
     # loop-invariant per-node columns (__deg, and in seed mode
     # __is_seed/__tele) ride the rank frame through every iteration's
     # select, so no per-iteration re-attachment join is needed
-    static_cols = [c for c in nd.columns if c != "__node"]
-    for it in range(iterations):
-        if delta_receipt and it == iterations - 1:
-            # snapshot the penultimate ranks; checkpointed so the
-            # receipt join doesn't recompute the shared iteration chain
-            prev_ranks = ranks.localCheckpoint(eager=False)
-            ranks = prev_ranks
+    keep = [F.col(c) for c in nd.columns]
+
+    def step(ranks: DataFrame) -> DataFrame:
         # per-NODE contribution first (node-sized join of two node-keyed
         # frames), then a single edge join — the edge relation is the
         # big side and should be touched exactly once per iteration.
@@ -330,28 +420,9 @@ def pagerank(
                 .agg(F.sum("__contrib").alias("__incoming"))
             )
         new_ranks = nd.join(incoming, nd["__node"] == incoming["__dst"], "left")
-        keep = [F.col("__node"), *[F.col(c) for c in static_cols]]
-        if symmetric and seeds is not None:
-            ranks = new_ranks.select(
-                *keep,
-                F.expr(
-                    "(coalesce(__is_seed, 0) * __tele + "
-                    f"{damping_pct} * "
-                    "coalesce(__incoming, cast(0 as bigint))) div 100"
-                ).alias("__rank"),
-            )
-        elif symmetric:
-            ranks = new_ranks.select(
-                *keep,
-                F.expr(
-                    f"(cast({teleport} as bigint) + {damping_pct} * "
-                    "coalesce(__incoming, cast(0 as bigint))) div 100"
-                ).alias("__rank"),
-            )
-        elif seeds is not None:
-            # directed PERSONALIZED: teleport AND dangling mass both
-            # land on the seed set — a surfer at a dead end restarts at
-            # a seed (damped like any hop); scalar payloads only
+        if sink_den is not None:
+            # scalar payload only (the one-row broadcast crossJoin rule:
+            # scalars yes, arrays never)
             sink_share = (
                 ranks.where(F.col("__deg").isNull())
                 .agg(
@@ -359,55 +430,22 @@ def pagerank(
                     .cast("bigint")
                     .alias("__sink_sum")
                 )
-                .crossJoin(F.broadcast(n_seeds))
-                .select(F.expr("__sink_sum div __s").alias("__sink_share"))
-            )
-            ranks = new_ranks.crossJoin(F.broadcast(sink_share)).select(
-                *keep,
-                F.expr(
-                    "(coalesce(__is_seed, 0) * "
-                    f"(__tele + {damping_pct} * __sink_share) + "
-                    f"{damping_pct} * "
-                    "coalesce(__incoming, cast(0 as bigint))) div 100"
-                ).alias("__rank"),
-            )
-        else:
-            # dangling mass: ranks sitting on nodes with no out-edge,
-            # redistributed uniformly — scalar payload only (the one-row
-            # broadcast crossJoin rule: scalars yes, arrays never)
-            sink_share = (
-                ranks.where(F.col("__deg").isNull())
-                .agg(
-                    F.coalesce(F.sum("__rank"), F.lit(0))
-                    .cast("bigint")
-                    .alias("__sink_sum")
+                .crossJoin(F.broadcast(sink_den))
+                .select(
+                    F.expr(f"__sink_sum div {sink_den.columns[0]}")
+                    .alias("__sink_share")
                 )
-                .crossJoin(F.broadcast(n_nodes))
-                .select(F.expr("__sink_sum div __n").alias("__sink_share"))
             )
-            ranks = new_ranks.crossJoin(F.broadcast(sink_share)).select(
-                *keep,
-                F.expr(
-                    f"(cast({teleport} as bigint) + {damping_pct} * "
-                    "(coalesce(__incoming, cast(0 as bigint)) + __sink_share)) "
-                    "div 100"
-                ).alias("__rank"),
-            )
-        if not symmetric and it + 1 < iterations:
-            # directed modes reference the rank frame TWICE per
-            # iteration (the contribution projection AND the dangling
-            # scalar) — truncate the lineage every round so the scalar
-            # reads a LogicalRDD instead of re-executing the chain
-            # (r17: the directed_personalized before-plan carried 168
-            # BroadcastExchanges with ZERO ReusedExchange — the doubled
-            # subtree was genuinely recomputed)
-            ranks = ranks.localCheckpoint(eager=False)
-        elif (
-            checkpoint_every
-            and (it + 1) % checkpoint_every == 0
-            and it + 1 < iterations
-        ):
-            ranks = ranks.localCheckpoint(eager=False)
+            new_ranks = new_ranks.crossJoin(F.broadcast(sink_share))
+        return new_ranks.select(*keep, F.expr(rank_sql).alias("__rank"))
+
+    ranks, prev_ranks = _fixed_rounds(
+        ranks,
+        step,
+        iterations,
+        _PAGERANK_CUT_EVERY if symmetric else _PAGERANK_DIRECTED_CUT_EVERY,
+        snapshot=delta_receipt,
+    )
     out = ranks.select(
         F.col("__node").alias("node"),
         F.col("__rank").alias("rank"),
@@ -439,7 +477,6 @@ def label_propagation(
     dst_col: str = "dst",
     iterations: int = 6,
     mode: str = "components",
-    checkpoint_every: int | None = 2,
     change_receipt: bool = False,
 ) -> DataFrame:
     """Fixed-round label propagation over an undirected edge relation
@@ -473,9 +510,10 @@ def label_propagation(
     localCheckpoint, so each round re-shuffles only the node-sized
     label frame) + one destination-keyed aggregate (components: MIN —
     map-side combinable; communities: per-(node,label) counts + one
-    row_number window). Fixed round count, zero driver actions, no
-    convergence probes — one lazy plan, same contract as
-    :func:`pagerank`.
+    row_number window). Fixed round count, no convergence probes; the
+    label frame is cut every ``_LABEL_PROP_CUT_EVERY`` (2) rounds, and
+    like every cut here each runs as a build-time job under AQE (module
+    docstring).
 
     ``change_receipt`` appends ``n_changed``: how many labels the
     FINAL round changed (same scalar every row, broadcast crossJoin —
@@ -510,12 +548,8 @@ def label_propagation(
     nodes = (
         e.select(F.col("__src").alias("__node")).distinct().localCheckpoint(eager=False)
     )
-    labels = nodes.withColumn("__label", F.col("__node"))
-    prev_labels = None
-    for it in range(iterations):
-        if change_receipt and it == iterations - 1:
-            prev_labels = labels.localCheckpoint(eager=False)
-            labels = prev_labels
+
+    def step(labels: DataFrame) -> DataFrame:
         lab_src = labels.select(F.col("__node").alias("__src"), F.col("__label"))
         if mode == "components":
             nbr = (
@@ -523,38 +557,37 @@ def label_propagation(
                 .groupBy("__dst")
                 .agg(F.min("__label").alias("__nbr"))
             )
-            labels = (
-                labels.join(nbr, labels["__node"] == nbr["__dst"], "left")
-                .select(
-                    F.col("__node"),
-                    F.least(
-                        F.col("__label"), F.coalesce(F.col("__nbr"), F.col("__label"))
-                    ).alias("__label"),
-                )
+            return labels.join(nbr, labels["__node"] == nbr["__dst"], "left").select(
+                F.col("__node"),
+                F.least(
+                    F.col("__label"), F.coalesce(F.col("__nbr"), F.col("__label"))
+                ).alias("__label"),
             )
-        else:
-            cnt = (
-                e.join(lab_src, "__src")
-                .groupBy("__dst", "__label")
-                .agg(F.count(F.lit(1)).alias("__c"))
-            )
-            w = Window.partitionBy("__dst").orderBy(
-                F.col("__c").desc(), F.col("__label").asc()
-            )
-            win = (
-                cnt.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .select(F.col("__dst"), F.col("__label").alias("__win"))
-            )
-            labels = (
-                labels.join(win, labels["__node"] == win["__dst"], "left")
-                .select(
-                    F.col("__node"),
-                    F.coalesce(F.col("__win"), F.col("__label")).alias("__label"),
-                )
-            )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            labels = labels.localCheckpoint(eager=False)
+        cnt = (
+            e.join(lab_src, "__src")
+            .groupBy("__dst", "__label")
+            .agg(F.count(F.lit(1)).alias("__c"))
+        )
+        w = Window.partitionBy("__dst").orderBy(
+            F.col("__c").desc(), F.col("__label").asc()
+        )
+        win = (
+            cnt.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .select(F.col("__dst"), F.col("__label").alias("__win"))
+        )
+        return labels.join(win, labels["__node"] == win["__dst"], "left").select(
+            F.col("__node"),
+            F.coalesce(F.col("__win"), F.col("__label")).alias("__label"),
+        )
+
+    labels, prev_labels = _fixed_rounds(
+        nodes.withColumn("__label", F.col("__node")),
+        step,
+        iterations,
+        _LABEL_PROP_CUT_EVERY,
+        snapshot=change_receipt,
+    )
     out = labels.select(F.col("__node").alias("node"), F.col("__label").alias("label"))
     if change_receipt:
         changed = (
@@ -591,72 +624,53 @@ def k_core(
     duplicate cliques survive — and the classic cheap preconditioner
     before clique-ish analyses (every triangle lives in the 2-core).
 
-    ``iterations`` is a FIXED peel count, not a convergence probe: the
-    whole computation stays one lazy plan (no driver actions), each
-    round is one edge-sized semi-join pass + one node-sized degree
-    aggregate, and the DuckDB oracle can unroll the same rounds. Each
+    ``iterations`` is a FIXED peel count, not a convergence probe (no
+    ``count()``/``first()``; each round's two lazy cuts still run as
+    build-time jobs under AQE — module docstring): each round is one
+    edge-sized semi-join pass + one node-sized degree aggregate, and
+    the DuckDB oracle can unroll the same rounds. Each
     round removes every node currently under-degree, so ``iterations``
     bounds the peel DEPTH (longest chain of cascading removals), which
     is tiny for real graphs; if the fixpoint needs more rounds the
-    result is a superset — and SAYS SO: one extra peel round (still
-    lazy, same plan) proves or refutes the fixpoint, emitted as the
+    result is a superset — and SAYS SO: one extra peel round (the same
+    peel step) proves or refutes the fixpoint, emitted as the
     ``is_converged`` column (true iff the extra round removed nothing).
     A long dependency chain can no longer silently over-report its
     core.
 
     Returns ``(node, degree, is_converged)`` for surviving nodes —
     degree within the surviving subgraph; ``is_converged`` is the same
-    scalar on every row (broadcast flag, no driver action)."""
+    scalar on every row (a broadcast one-row flag, computed in the
+    caller's action)."""
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
     if iterations < 1:
         raise ValueError(f"k_core: iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
-    alive_e = e
-    for _ in range(iterations):
-        deg = (
-            alive_e.select(F.col("a").alias("n"))
-            .unionByName(alive_e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.where(F.col("d") >= k).select("n").localCheckpoint(eager=False)
-        alive_e = (
-            alive_e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
+
+    def peel(alive_e: DataFrame) -> DataFrame:
+        keep = (
+            _undirected_degrees(alive_e)
+            .where(F.col("d") >= k)
+            .select("n")
             .localCheckpoint(eager=False)
         )
+        return alive_e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi").join(
+            keep.withColumnRenamed("n", "b"), "b", "left_semi"
+        )
+
+    alive_e = _undirected_edges(edges, src_col, dst_col).cache()
+    for _ in range(iterations):
+        alive_e = peel(alive_e).localCheckpoint(eager=False)
     # convergence certificate: one extra peel round — the peel is a
     # monotone contraction (next_e ⊆ alive_e), so equal EDGE COUNTS
     # prove the fixpoint; one scalar-only broadcast crossJoin
-    deg_x = (
-        alive_e.select(F.col("a").alias("n"))
-        .unionByName(alive_e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    keep_x = deg_x.where(F.col("d") >= k).select("n").localCheckpoint(eager=False)
-    next_e = alive_e.join(keep_x.withColumnRenamed("n", "a"), "a", "left_semi").join(
-        keep_x.withColumnRenamed("n", "b"), "b", "left_semi"
-    )
     converged = (
         alive_e.agg(F.count(F.lit(1)).alias("__before"))
-        .crossJoin(F.broadcast(next_e.agg(F.count(F.lit(1)).alias("__after"))))
+        .crossJoin(F.broadcast(peel(alive_e).agg(F.count(F.lit(1)).alias("__after"))))
         .select((F.col("__before") == F.col("__after")).alias("is_converged"))
     )
-    final_deg = (
-        alive_e.select(F.col("a").alias("node"))
-        .unionByName(alive_e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
+    final_deg = _undirected_degrees(alive_e).select(
+        F.col("n").alias("node"), F.col("d").alias("degree")
     )
     return final_deg.where(F.col("degree") >= k).crossJoin(F.broadcast(converged))
 
@@ -685,22 +699,8 @@ def triangle_count(
     # truncation each reference re-executes the whole upstream pair
     # generator (minhash pipeline in the near-dup query — measured 7 s
     # for a 2 s graph)
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionByName(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
+    deg = _undirected_degrees(e).localCheckpoint(eager=False)
     ed = e.join(
         deg.select(F.col("n").alias("a"), F.col("d").alias("__da")), "a"
     ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("__db")), "b")
@@ -739,7 +739,6 @@ def hits(
     dst_col: str = "dst",
     iterations: int = 6,
     base: int = 1_000_000,
-    checkpoint_every: int | None = 4,
 ) -> DataFrame:
     """Hubs-and-authorities (HITS / Kleinberg) over a directed edge
     relation: fixed ``iterations`` of the coupled power iteration
@@ -763,9 +762,10 @@ def hits(
     co-located layout instead of re-shuffling the big edge side;
     only the node-sized score frame moves per iteration. The L1 total
     is one scalar aggregate per half-step (broadcast as a scalar —
-    the one-row crossJoin rule), there are no driver actions, and the
-    periodic lazy checkpoint truncates the lineage like
-    :func:`pagerank`. The renormalization product (≈ n²·base²) runs in
+    the one-row crossJoin rule), each half-step's raw aggregate is
+    lazily cut, and the hub frame is cut every ``_HITS_CUT_EVERY`` (4)
+    rounds like :func:`pagerank` — every cut a build-time job under AQE
+    (module docstring). The renormalization product (≈ n²·base²) runs in
     exact decimal(38,0) — wide enough past a quadrillion nodes — and
     the quotient drops back to bigint.
 
@@ -795,14 +795,22 @@ def hits(
         F.expr(f"count(*) * cast({base} as bigint)").alias("__total")
     ).localCheckpoint(eager=False)
 
-    def _normalize(raw: DataFrame, score: str) -> DataFrame:
-        # raw is node-keyed (__node, score) with absent nodes missing;
-        # rescale to Σ = n·base and re-attach the zero-score nodes.
+    def half_step(
+        e_part: DataFrame, scores: DataFrame, on: str, to: str, src_score: str, score: str
+    ) -> DataFrame:
+        # push ``src_score`` along the edge copy partitioned on ``on``,
+        # then rescale to Σ = n·base and re-attach the zero-score nodes.
         # raw is referenced TWICE (the scalar sum + the values) — lazily
         # checkpoint so the plan is truncated to a LogicalRDD instead of
         # DOUBLING per half-step (2^(2·iterations) leaf expansion
         # otherwise; planning alone dominated the wall time)
-        raw = raw.localCheckpoint(eager=False)
+        raw = (
+            e_part.join(scores, e_part[on] == scores["__node"])
+            .groupBy(to)
+            .agg(F.sum(src_score).alias(score))
+            .select(F.col(to).alias("__node"), F.col(score))
+            .localCheckpoint(eager=False)
+        )
         s = raw.agg(F.sum(score).cast("bigint").alias("__sum"))
         return (
             nodes.join(raw, "__node", "left")
@@ -822,26 +830,22 @@ def hits(
             )
         )
 
-    hubs = nodes.withColumn("__hub", F.lit(base).cast("bigint"))
+    # the loop carries the hub frame; each round's auth frame is only
+    # read by that round's hub half-step and, after the last round, by
+    # the output join
     auths = None
-    for it in range(iterations):
-        auth_raw = (
-            e_src.join(hubs, e_src["__src"] == hubs["__node"])
-            .groupBy("__dst")
-            .agg(F.sum("__hub").alias("__auth"))
-            .select(F.col("__dst").alias("__node"), F.col("__auth"))
-        )
-        auths = _normalize(auth_raw, "__auth")
-        hub_raw = (
-            e_dst.join(auths, e_dst["__dst"] == auths["__node"])
-            .groupBy("__src")
-            .agg(F.sum("__auth").alias("__hub"))
-            .select(F.col("__src").alias("__node"), F.col("__hub"))
-        )
-        hubs = _normalize(hub_raw, "__hub")
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            hubs = hubs.localCheckpoint(eager=False)
-            auths = auths.localCheckpoint(eager=False)
+
+    def step(hubs: DataFrame) -> DataFrame:
+        nonlocal auths
+        auths = half_step(e_src, hubs, "__src", "__dst", "__hub", "__auth")
+        return half_step(e_dst, auths, "__dst", "__src", "__auth", "__hub")
+
+    hubs, _ = _fixed_rounds(
+        nodes.withColumn("__hub", F.lit(base).cast("bigint")),
+        step,
+        iterations,
+        _HITS_CUT_EVERY,
+    )
     return hubs.join(auths, "__node").select(
         F.col("__node").alias("node"),
         F.col("__hub").alias("hub"),
@@ -863,8 +867,9 @@ def k_hop_distances(
     from a trusted (or contaminated) set", k-hop neighborhood
     extraction, and blast-radius reports. Nodes beyond ``max_hops``
     are absent (distance is a certificate only up to the fixed depth —
-    the k-core precedent: fixed rounds, no convergence probe, the
-    whole computation stays one lazy plan with zero driver actions).
+    the k-core precedent: fixed rounds, no convergence probe; each
+    hop's lazy cut still runs as a build-time job under AQE — module
+    docstring).
 
     Per hop: one join of the FRONTIER (nodes first reached on the
     previous hop — not the whole settled set) against the
@@ -1022,22 +1027,9 @@ def degree_distribution(
 
     Returns ``(bucket, n_nodes, min_degree, max_degree)`` where bucket
     b covers degrees in [2^b, 2^(b+1))."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionByName(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
     return (
-        deg.select(
+        _undirected_degrees(_undirected_edges(edges, src_col, dst_col))
+        .select(
             F.expr("cast(floor(log2(cast(d as double))) as int)").alias("bucket"),
             "d",
         )

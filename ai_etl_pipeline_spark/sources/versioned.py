@@ -91,7 +91,11 @@ def versioned_upsert(
        the semi-join's build side is the updates);
     2. rewrite: rows of touched files, anti-joined against the update
        keys, unioned with ALL update rows, land in one new file set
-       under ``data/v{N}``;
+       under ``data/v{N}``. ``len(touched)`` is an upper bound on its
+       size, not a count: the write coalesces to that many partitions,
+       and coalesce may yield fewer or leave some empty (no file), so
+       a rewrite can emit fewer files. No reader may depend on the
+       file count — readers take whatever the manifest lists;
     3. commit: new manifest = untouched files + new files. Readers of
        older versions are untouched (their manifests still list the
        old files, which are never deleted)."""

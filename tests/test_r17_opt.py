@@ -9,7 +9,9 @@ the promise independently of the registry's oracle gate:
   (chains, blocks, singletons, string ids).
 - graph.pagerank: the directed-mode per-iteration lineage truncation
   and the folded loop-invariant seed columns must leave ranks
-  bit-identical to a driver-side replay of the integer iteration.
+  bit-identical to a driver-side replay of the integer iteration —
+  uniform, seeded (personalized), warm-started and with the
+  ``max_delta`` receipt, symmetric and directed.
 - sources.versioned.versioned_upsert: the coalesce-on-write rewrite
   must keep snapshot contents and the change feed identical, and the
   rewrite must still produce real part files.
@@ -84,9 +86,18 @@ def test_cc_seeded_init_string_ids(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x", "lone": "lone"}
 
 
-def _pagerank_reference(edges, iterations, damping_pct, base, symmetric):
-    """Driver-side replay of the integer iteration (directed mode with
-    uniform dangling redistribution)."""
+_PR_EDGES = [(1, 2), (2, 3), (3, 1), (4, 1), (5, 4), (6, 1), (2, 6)]
+# adds a pure sink (7) in directed mode and a self-loop that must drop
+_PR_EDGES_SINK = _PR_EDGES + [(3, 7), (7, 7)]
+
+
+def _pagerank_reference(
+    edges, iterations, damping_pct, base, symmetric, seeds=None, init=None
+):
+    """Driver-side replay of the integer iteration: uniform or seeded
+    (personalized) teleport, directed sink mass redistributed uniformly
+    or onto the seeds, optional warm-start ranks. Returns the final
+    ranks, the out-degrees and the penultimate ranks."""
     es = set()
     for s, d in edges:
         if s != d:
@@ -100,36 +111,86 @@ def _pagerank_reference(edges, iterations, damping_pct, base, symmetric):
     deg = {}
     for s, _ in es:
         deg[s] = deg.get(s, 0) + 1
-    rank = {n: base for n in nodes}
+    init = init or {}
+    rank = {n: init.get(n, base) for n in nodes}
     teleport = (100 - damping_pct) * base
+    seed_set = set(seeds or ()) & set(nodes)
+    if seeds is not None:
+        tele = teleport * len(nodes) // len(seed_set)
+    prev = None
     for _ in range(iterations):
+        prev = rank
         incoming = {n: 0 for n in nodes}
         for s, d in es:
             incoming[d] += rank[s] // deg[s]
-        if symmetric:
+        sink_sum = sum(rank[n] for n in nodes if n not in deg)
+        if seeds is not None:
+            share = 0 if symmetric else sink_sum // len(seed_set)
             rank = {
-                n: (teleport + damping_pct * incoming[n]) // 100 for n in nodes
+                n: ((n in seed_set) * (tele + damping_pct * share)
+                    + damping_pct * incoming[n]) // 100
+                for n in nodes
             }
         else:
-            sink_sum = sum(rank[n] for n in nodes if n not in deg)
-            share = sink_sum // len(nodes)
+            share = 0 if symmetric else sink_sum // len(nodes)
             rank = {
                 n: (teleport + damping_pct * (incoming[n] + share)) // 100
                 for n in nodes
             }
-    return rank, deg
+    return rank, deg, prev
 
 
-@pytest.mark.parametrize("symmetric", [True, False])
-def test_pagerank_r17_shape_matches_reference(spark, symmetric):
-    edges = [(1, 2), (2, 3), (3, 1), (4, 1), (5, 4), (6, 1), (2, 6)]
+@pytest.mark.parametrize(
+    "edges, iterations, symmetric, seeds, init, delta",
+    [
+        pytest.param(_PR_EDGES, 5, True, None, None, False, id="True"),
+        pytest.param(_PR_EDGES, 5, False, None, None, False, id="False"),
+        pytest.param(_PR_EDGES_SINK, 5, True, [2, 5, 42], None, False, id="seeded-symmetric"),
+        pytest.param(_PR_EDGES_SINK, 5, False, [2, 5, 42], None, False, id="seeded-directed"),
+        pytest.param(
+            _PR_EDGES_SINK, 4, True, None, {1: 700_000, 2: 1_400_000, 99: 5}, False,
+            id="warm-start-symmetric",
+        ),
+        pytest.param(
+            _PR_EDGES_SINK, 3, False, [7], {3: 2_000_000, 7: 10}, False,
+            id="warm-start-seeded-directed",
+        ),
+        # iterations 4 with the symmetric cadence of 3: the cadence cut
+        # and the receipt snapshot land on the same round
+        pytest.param(_PR_EDGES_SINK, 4, True, None, None, True, id="delta-symmetric"),
+        pytest.param(_PR_EDGES_SINK, 5, False, None, None, True, id="delta-directed"),
+        pytest.param(_PR_EDGES_SINK, 1, False, [1], None, True, id="delta-one-round"),
+    ],
+)
+def test_pagerank_r17_shape_matches_reference(
+    spark, edges, iterations, symmetric, seeds, init, delta
+):
     e = spark.createDataFrame(edges, "src bigint, dst bigint")
+    kwargs = {}
+    if seeds is not None:
+        kwargs["seeds"] = spark.createDataFrame([(s,) for s in seeds], "node bigint")
+    if init is not None:
+        kwargs["init_ranks"] = spark.createDataFrame(
+            list(init.items()), "node bigint, rank bigint"
+        )
     out = graph.pagerank(
-        e, iterations=5, damping_pct=85, base=1_000_000, symmetric=symmetric
+        e,
+        iterations=iterations,
+        damping_pct=85,
+        base=1_000_000,
+        symmetric=symmetric,
+        delta_receipt=delta,
+        **kwargs,
     )
-    got = {r["node"]: (r["rank"], r["degree"]) for r in out.collect()}
-    rank, deg = _pagerank_reference(edges, 5, 85, 1_000_000, symmetric)
+    rank, deg, prev = _pagerank_reference(
+        edges, iterations, 85, 1_000_000, symmetric, seeds, init
+    )
+    rows = out.collect()
+    got = {r["node"]: (r["rank"], r["degree"]) for r in rows}
     assert got == {n: (rank[n], deg.get(n, 0)) for n in rank}
+    if delta:
+        want = max(abs(rank[n] - prev[n]) for n in rank)
+        assert {r["max_delta"] for r in rows} == {want}
 
 
 def test_versioned_upsert_coalesce_contents_and_files(spark, tmp_path):
